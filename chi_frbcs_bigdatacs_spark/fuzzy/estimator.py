@@ -6,34 +6,42 @@ build job (E1), transform() is the map-only classify job (E2) with
 the model broadcast to tasks (the Spark-native DistributedCache).
 
 Physical tuning vs the plain spec functions in rules.py:
-  - only the NARROW repartitioned input is persisted; membership
-    arrays are recomputed per pass (pure codegen arithmetic — far
-    cheaper at 100 TB than caching d wide array columns). The
-    repartition spreads a few large input splits across executors
-    before the <=2^d-per-row cell expansion.
-  - class counts are collected once (tiny: |classes| rows) and the
-    CS cost vector + default class are folded into the build plan as
-    literals — no broadcast-join exchange for costs.
-  - the final rule base is collected to the driver (bounded by the
-    data-touched subset of L^d cells; L=3,d=4 -> <= 81 rules; the
-    reference's models are the same size) and re-emitted as a
-    LITERAL DataFrame, so transform() is a pure broadcast equi-join
-    on the cell key with no recomputation of the build lineage (the
-    Spark-native shape of the reference's DistributedCache model
-    shipping; see the measured note in transform_fuzzified for why
-    plan-literal map-only variants lose to this join).
+  - only the NARROW repartitioned input is read by the heavy job;
+    membership arrays are recomputed per pass (pure codegen
+    arithmetic — far cheaper at 100 TB than caching d wide array
+    columns). The repartition spreads a few large input splits across
+    executors before the <=2^d-per-row cell expansion.
+  - the build's one Spark job is the per-(cell, class) aggregate
+    (rules.raw_rule_stats, <= data-touched L^d cells x classes rows).
+    With collect_rules=True (the default) that aggregate is collected
+    and the rest of the build — CS costs, PCF-CS weights, conflict
+    resolution, bucket fusion, min-support pruning — runs in plain
+    Python on the driver (rule_base_from_raw), bit-identical to the
+    DataFrame algebra in rules.py and the DuckDB oracle. The rule
+    base never goes back through Spark.
+  - transform() of a WR model with driver-resident rules is the numpy
+    batch scorer (transform_pandas): one map-only mapInPandas pass,
+    the rules riding in the task closure. The cell-explosion
+    broadcast equi-join (transform_fuzzified) is the one scorer for
+    the AC FRM, for distributed rule bases, and for an explicit
+    broadcast_rules request.
   - for very high-d problems construct the ESTIMATOR with
     collect_rules=False: fit() materializes the rule base as a
     persisted DataFrame instead and transform() broadcast-joins it.
     NOTE: "distributed" here bounds the DRIVER PYTHON process only —
     Spark's broadcast still materializes the rule base in the JVM;
-    for rule bases too large to broadcast, swap the broadcast hint
-    for a plain shuffle hash join (rules side is still the small
-    side of the cell equi-join).
-  - the join-path per-example argmax uses max(struct(...)) hash
+    for rule bases too large to broadcast, transform(
+    broadcast_rules=False) runs the same cell equi-join as a shuffle
+    hash join (rules side is still the small side).
+  - the join-path per-example argmax uses max(decimal key) hash
     aggregation (map-side combine, no sort shuffle) instead of a
-    row_number window; the struct field order encodes exactly the
-    oracle's ORDER BY score DESC, l1..ld ASC, cls ASC tie-break.
+    row_number window; the key encodes exactly the oracle's
+    ORDER BY score DESC, l1..ld ASC, cls ASC tie-break.
+
+Scoring policy for unusable feature values: a NULL or NaN feature
+value, or an out-of-vocab nominal code, matches no label of that
+feature, so the example matches no rule and takes the default class
+— on both scorers.
 
 Model persistence (O12): rules parquet + params JSON
 [REF: mapreduce/MapredOutput.java, Builder.java | conf=M].
@@ -42,8 +50,10 @@ Model persistence (O12): rules parquet + params JSON
 from __future__ import annotations
 
 import json
+import math
 import os
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,7 +111,7 @@ def should_broadcast_rules(
 
 def _mu_per_rule(pdf, d, feat_names, kinds, Ls, peaks, hws, rl):
     """n x R membership-product matrix — the shared numpy core of
-    transform_pandas and ac_cscores_pandas. Evaluates the identical
+    transform_pandas and ac_per_example_pandas. Evaluates the identical
     IEEE chain as fuzzify + the cell mu product (pinned by the
     pandas-scorer parity tests)."""
     import numpy as np
@@ -229,6 +239,95 @@ def _rules_schema(d: int) -> StructType:
     )
 
 
+_WEIGHT_UNIT = Decimal(1).scaleb(-R.WEIGHT_DECIMALS)
+
+
+def _spark_round(x: float) -> float:
+    """Spark's round(double, WEIGHT_DECIMALS): HALF_UP on the double's
+    shortest decimal string, converted back to the nearest double.
+    Spark's decimal has no negative zero, hence the `+ 0.0`."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_WEIGHT_UNIT, ROUND_HALF_UP)) + 0.0
+
+
+def _best(cands):
+    """O9 winner of (cls, weight) pairs: max weight, ties -> lowest cls."""
+    return min(cands, key=lambda cw: (-cw[1], cw[0]))
+
+
+def rule_base_from_raw(
+    raw_rows,
+    d: int,
+    bucketed: bool = False,
+    cost_mode: str | dict = "cs",
+    merge_policy: str = "max",
+    min_rule_support: int = 0,
+) -> list[tuple]:
+    """The build's tail on the driver: R.weights_from_raw(resolve=True)
+    with R.cost_literal costs, then R.merge_max / R.merge_avg when
+    bucketed, then min-support pruning — in plain Python over the
+    collected R.raw_rule_stats rows ((bucket,) l1..ld, label, sraw,
+    n_gen). Returns sorted (l1..ld, cls, weight) tuples, bit-identical
+    to the DataFrame algebra:
+      - cost = maxn / n per (bucket) scope, 1.0 for 'none', the dict
+        value (default 1.0) for an explicit cost matrix;
+      - s = cost * sraw; stot = sum of s over the cell's classes,
+        added in ascending class order;
+      - weight = round((2 s - stot) / stot, 6) on candidates with
+        n_gen > 0 (_spark_round);
+      - resolution and MAX fusion keep the max weight per cell, ties
+        to the lowest class; AVE fusion divides the exact
+        DECIMAL(18,6) sum of the bucket weights by their count."""
+    counts: dict[tuple, int] = {}  # (bucket, class) -> examples
+    cells: dict[tuple, list] = {}  # (bucket, cell) -> candidates
+    o = 1 if bucketed else 0
+    for r in raw_rows:
+        b = r[0] if bucketed else None
+        cell = tuple(r[o : o + d])
+        label, sraw, n_gen = r[o + d :]
+        counts[(b, label)] = counts.get((b, label), 0) + n_gen
+        cells.setdefault((b, cell), []).append((label, sraw, n_gen))
+    if isinstance(cost_mode, dict):
+        cost = {k: float(cost_mode.get(k[1], 1.0)) for k in counts}
+    elif cost_mode == "none":
+        cost = dict.fromkeys(counts, 1.0)
+    else:
+        maxn: dict = {}
+        for (b, _), n in counts.items():
+            maxn[b] = max(maxn.get(b, 0), n)
+        cost = {k: float(maxn[k[0]]) / float(n) for k, n in counts.items()}
+    resolved: dict[tuple, list] = {}  # cell -> per-bucket (cls, weight)
+    for (b, cell), cands in cells.items():
+        cands.sort()
+        s = [cost[(b, label)] * sraw for label, sraw, _ in cands]
+        stot = 0.0
+        for v in s:
+            stot += v
+        rules = [
+            (label, _spark_round((2.0 * sv - stot) / stot))
+            for (label, _, n_gen), sv in zip(cands, s)
+            if n_gen > 0
+        ]
+        if rules:
+            resolved.setdefault(cell, []).append(_best(rules))
+    if bucketed and merge_policy != "max":
+        for cell, per_bucket in resolved.items():
+            sums: dict[int, list] = {}
+            for c, w in per_bucket:
+                acc = sums.setdefault(c, [Decimal(0), 0])
+                acc[0] += Decimal(repr(w))
+                acc[1] += 1
+            resolved[cell] = [(c, float(t) / k) for c, (t, k) in sums.items()]
+    out = [(*cell, *_best(per_bucket)) for cell, per_bucket in resolved.items()]
+    if min_rule_support > 0:
+        cov: dict[tuple, int] = {}
+        for (_, cell), cands in cells.items():
+            cov[cell] = cov.get(cell, 0) + sum(n for _, _, n in cands)
+        out = [t for t in out if cov[t[:d]] >= min_rule_support]
+    return sorted(out)
+
+
 @dataclass
 class ChiFRBCSModel:
     parts: FuzzyPartitions
@@ -265,7 +364,31 @@ class ChiFRBCSModel:
     def transform(
         self, df: DataFrame, broadcast_rules: bool | None = None
     ) -> DataFrame:
+        """Score df -> (id, label, prediction). A WR model with
+        driver-resident rules scores with the numpy batch scorer
+        (transform_pandas): one map-only pass, no shuffle. The AC FRM,
+        a distributed rule base, or an explicit broadcast_rules
+        request take the cell equi-join (transform_fuzzified).
+
+        Both give a row with a NULL or NaN feature the default class.
+        fuzzify alone would not: Spark's greatest/least skip NULL and
+        rank NaN highest, so the shoulder labels of such a value come
+        out as membership 1. The join path therefore nulls the
+        membership array of a NULL/NaN numeric value, which
+        candidate_cells pads to the never-matching sentinel cell."""
+        if self.frm == "wr" and self.rules_rows is not None and broadcast_rules is None:
+            return self.transform_pandas(df)
         fuzz = R.fuzzify(df, self.parts)
+        types = dict(df.dtypes)
+        for f in self.parts.features:
+            if f.kind != "numeric":
+                continue  # crisp indicators are already all-zero
+            x = F.col(f.name)
+            bad = x.isNull()
+            if types[f.name] in ("double", "float"):
+                bad = bad | F.isnan(x)
+            mus = R.mus_col(f.name)
+            fuzz = fuzz.withColumn(mus, F.when(~bad, F.col(mus)))
         return self.transform_fuzzified(fuzz, broadcast_rules=broadcast_rules)
 
     def transform_fuzzified(
@@ -372,33 +495,28 @@ class ChiFRBCSModel:
         """mapInPandas scorer: per Arrow batch, build the n x L
         membership matrix per feature in numpy, gather per rule,
         product, scale by weights, argmax with the same deterministic
-        tie-break as the expression path (rules pre-sorted by
+        tie-break as the equi-join scorer (rules pre-sorted by
         antecedent labels then class; np.argmax takes the first max).
-        Bit-identical to transform() — numpy evaluates the identical
-        IEEE expression chain (pinned by tests).
+        Bit-identical to transform_fuzzified — numpy evaluates the
+        identical IEEE expression chain (pinned by
+        tests/test_pandas_scorer.py). A NULL/NaN feature or an
+        out-of-vocab nominal code has no positive membership, so the
+        row scores -inf everywhere and takes the default class.
 
-        WHEN TO USE WHICH (fit-path A/B re-measured r13, sf0.1
-        local[32], warm medians, fitted model scoring the 32-way
-        input — NOTES r13 table): transform()'s candidate explosion
-        is 2^d rows per example (cost ~ 2^d * n) while this scorer's
-        is n * R (R = rule count). d=4: expression 7.0s vs pandas
-        1.6s; d=8: 4.2s vs 0.19s — the matmul wins BOTH at fixture
-        scale because rule bases are tiny there and the driver-side
-        rule collect it requires is free. Guidance: this path is the
-        default for big-d (d>=8) and for any fitted-model scoring
-        where the rules are driver-resident anyway (pair with
-        collect_rules=True — it warns on a distributed rule base).
-        transform() (broadcast-join) remains the DISTRIBUTED default:
-        no driver rule materialization, and if the rule base outgrows
-        the JVM broadcast budget, transform(broadcast_rules=False)
-        runs the same cell equi-join as a shuffle-hash join — nothing
-        rule-sized ever leaves the executors (the classify_wr_bigmodel
-        path). PARTITIONING TRAP (r13): ad-hoc transform() on a raw
-        low-split scan inherits its parallelism into the cell
-        explosion (3-partition sf0.1 scan: 25s vs 7s at 32) — fit()
-        repartitions to defaultParallelism before caching, so the
-        fit_transform path never hits this; repartition first if you
-        score a cold DataFrame."""
+        WHEN TO USE WHICH: transform() calls this for every WR model
+        with driver-resident rules. Its cost is n * R (R = rule count)
+        in one map-only pass, against the equi-join's 2^d-row cell
+        explosion per example plus a groupBy(id) exchange (r13, sf0.1
+        local[32]: d=4 7.0s join vs 1.6s numpy; d=8 4.2s vs 0.19s).
+        The equi-join stays the scorer for the AC FRM and for rule
+        bases kept off the driver (collect_rules=False): nothing
+        rule-sized leaves the executors, and broadcast_rules=False
+        runs it as a shuffle-hash join past the broadcast budget.
+        Calling this on a distributed rule base collects it (with a
+        warning). PARTITIONING TRAP (r13): scoring a raw low-split
+        scan inherits its parallelism (3-partition sf0.1 scan: 25s vs
+        7s at 32) — repartition a cold DataFrame first; fit_transform
+        scores fit()'s repartitioned input and never hits this."""
         import numpy as np
 
         parts = self.parts
@@ -463,7 +581,9 @@ class ChiFRBCSModel:
 
     # -- persistence (O12) --
     def save(self, path: str) -> None:
-        spark = SparkSession.getActiveSession()
+        # active(), not getActiveSession(): the latter is thread-local
+        # and None on a thread that has not touched a DataFrame yet
+        spark = SparkSession.active()
         self.rules_df(spark).write.mode("overwrite").parquet(f"{path}/rules.parquet")
         meta = {
             "num_labels": self.parts.num_labels,
@@ -539,20 +659,27 @@ class ChiFRBCSClassifier:
         into per-(cell, class) statistics (R.raw_rule_stats — map-side
         combined, <= L^d x classes output rows). Class counts (= sum
         of generated-cell flags), CS costs, the default class, PCF
-        weights, and conflict resolution all derive from that tiny
-        aggregate — computed on a collected-and-recreated LOCAL
-        DataFrame so the weight arithmetic/rounding exprs are the very
-        ones the distributed path and the DuckDB oracle use. Only the
-        NARROW repartitioned input is cached; membership arrays are
-        recomputed per pass — pure codegen arithmetic, far cheaper at
-        100 TB than caching d wide array columns."""
+        weights, conflict resolution, bucket fusion and min-support
+        pruning all derive from that tiny aggregate. With
+        collect_rules=True it is collected and finished on the driver
+        by rule_base_from_raw (plain Python, bit-identical to the
+        weights_from_raw algebra — no second Spark job); with
+        collect_rules=False it stays a persisted DataFrame and the
+        rule base is built there by R.weights_from_raw. The input is
+        cached only when a later pass reads it again (fit_transform's
+        resubstitution, or the distributed build); membership arrays
+        are recomputed per pass — pure codegen arithmetic, far cheaper
+        at 100 TB than caching d wide array columns."""
         self.release()  # drop any cache pinned by a previous fit
         _release_retained()  # ... including by OTHER estimator instances
         spark = df.sparkSession
         n = self.repartition or spark.sparkContext.defaultParallelism
         # repartition the narrow input BEFORE fuzzification so the wide
         # membership arrays are computed in parallel, not shuffled
-        base = df.repartition(n).persist()
+        base = df.repartition(n)
+        cache_base = _retain_fuzz or not self.collect_rules
+        if cache_base:
+            base = base.persist()
 
         keys: list[str] = []
         fz = R.with_antecedent(R.fuzzify(base, self.parts), self.parts)
@@ -565,55 +692,28 @@ class ChiFRBCSClassifier:
         raw = R.raw_rule_stats(fz, self.parts, keys)
 
         def _empty() -> ValueError:
-            base.unpersist()
+            if cache_base:
+                base.unpersist()
             return ValueError(
                 "ChiFRBCSClassifier.fit: empty training set (no rows after "
                 "validity filtering) — cannot derive costs or a default class"
             )
 
-        def _post(raw_df: DataFrame, crows) -> DataFrame:
-            """O5 costs + O8/O9 (+O11 fusion) on the tiny aggregate."""
-            cost_col = R.cost_literal(crows, self.cost_mode, bucketed=bool(keys))
-            rules = R.weights_from_raw(
-                raw_df, self.parts, keys, resolve=True, cost_col=cost_col
-            )
-            if keys:
-                rules = (
-                    R.merge_max(rules, ants)
-                    if self.merge_policy == "max"
-                    else R.merge_avg(rules, ants)
-                )
-            return rules.select(*ants, "cls", "weight")
-
+        glob: dict[int, int] = {}
         if self.collect_rules:
             raw_rows = raw.collect()  # THE heavy job; tiny result
             if not raw_rows:
                 raise _empty()
-            counts: dict[tuple, int] = {}
             for r in raw_rows:
-                k = (r["bucket"] if keys else None, r["label"])
-                counts[k] = counts.get(k, 0) + r["n_gen"]
-            crows = [
-                {"bucket": b, "label": lab, "n": cnt}
-                for (b, lab), cnt in counts.items()
-            ]
-            local = spark.createDataFrame(raw_rows, schema=raw.schema)
-            rows: list[tuple] | None = [
-                tuple(r) for r in _post(local, crows).collect()
-            ]
-            if self.min_rule_support > 0:
-                # per-cell coverage from the aggregate already on the
-                # driver: sum n_gen across buckets and labels
-                d = len(ants)
-                cov: dict[tuple, int] = {}
-                for r in raw_rows:
-                    cell = tuple(r[a] for a in ants)
-                    cov[cell] = cov.get(cell, 0) + r["n_gen"]
-                rows = [
-                    t
-                    for t in rows
-                    if cov.get(t[:d], 0) >= self.min_rule_support
-                ]
+                glob[r["label"]] = glob.get(r["label"], 0) + r["n_gen"]
+            rows: list[tuple] | None = rule_base_from_raw(
+                raw_rows,
+                len(ants),
+                bucketed=bool(keys),
+                cost_mode=self.cost_mode,
+                merge_policy=self.merge_policy,
+                min_rule_support=self.min_rule_support,
+            )
             rdf: DataFrame | None = None
         else:
             # scale path: the aggregate stays a persisted DataFrame
@@ -626,8 +726,20 @@ class ChiFRBCSClassifier:
             if not crows:
                 raw.unpersist()
                 raise _empty()
-            rows = None
-            rdf = _post(raw, crows)
+            for r in crows:
+                glob[r["label"]] = glob.get(r["label"], 0) + r["n"]
+            # O5 costs + O8/O9 (+O11 fusion) on the aggregate
+            cost_col = R.cost_literal(crows, self.cost_mode, bucketed=bool(keys))
+            rdf = R.weights_from_raw(
+                raw, self.parts, keys, resolve=True, cost_col=cost_col
+            )
+            if keys:
+                rdf = (
+                    R.merge_max(rdf, ants)
+                    if self.merge_policy == "max"
+                    else R.merge_avg(rdf, ants)
+                )
+            rdf = rdf.select(*ants, "cls", "weight")
             if self.min_rule_support > 0:
                 cov = raw.groupBy(*ants).agg(
                     F.sum("n_gen").alias("n_covered")
@@ -640,14 +752,12 @@ class ChiFRBCSClassifier:
             rdf = rdf.persist()
             rdf.count()
             raw.unpersist()
-        glob: dict[int, int] = {}
-        for r in crows:
-            glob[r["label"]] = glob.get(r["label"], 0) + r["n"]
+            rows = None
         default_cls = min(glob, key=lambda c: (-glob[c], c))
         if _retain_fuzz:
             self._base = base  # reusable for resubstitution scoring
             _RETAINED_FUZZ.append(base)
-        else:
+        elif cache_base:
             base.unpersist()
         return ChiFRBCSModel(
             self.parts, rows, default_cls, self.frm, rules_dataframe=rdf
@@ -656,30 +766,12 @@ class ChiFRBCSClassifier:
     def fit_transform(
         self, df: DataFrame, broadcast_rules: bool | None = None
     ) -> DataFrame:
-        """Fit and score the same data (resubstitution), reusing the
-        persisted narrow input for both passes.
-
-        Scoring path (r16): a WR fit with driver-resident rules takes
-        the numpy batch scorer — exactly the configuration
-        transform_pandas documents as its home turf (the rules are on
-        the driver ANYWAY, bounded by the data-touched L^d cells, and
-        the matmul needs NO shuffle: one map-only pass vs the join
-        path's 2^d-per-row cell explosion + groupBy(id) exchange of
-        every example — the better plan at fixture scale AND at 100 TB;
-        guide §4.2 batch-vectorized native code over JVM expression
-        chains). Measured at sf0.1/local[32], warm: 0.5s exec + 0.03s
-        plan vs 1.9s + 0.8s for the join scorer, bit-identical
-        predictions (tests/test_pandas_scorer.py pins parity; the
-        classify_* oracles re-verified). An explicit broadcast_rules
-        request, the AC FRM, or collect_rules=False (no driver rules
-        by design) keep the equi-join scorer."""
+        """Fit and score the same data (resubstitution): the training
+        input cached by fit() feeds transform() directly, so scoring
+        skips the input scan and repartition. transform() picks the
+        scorer as usual — the numpy batch scorer for a WR model with
+        driver-resident rules, the cell equi-join otherwise."""
         model = self.fit(df, _retain_fuzz=True)
-        if (
-            self.frm == "wr"
-            and model.rules_rows is not None
-            and broadcast_rules is None
-        ):
-            return model.transform_pandas(self._base)
         return model.transform(self._base, broadcast_rules=broadcast_rules)
 
     def release(self) -> None:

@@ -126,7 +126,7 @@ class _ChiModelWriter(MLWriter):
 class _ChiModelReader(MLReader):
     def load(self, path: str) -> "ChiFRBCSModel":
         metadata = DefaultParamsReader.loadMetadata(path, self.sc)
-        spark = SparkSession.getActiveSession()
+        spark = SparkSession.active()
         model = ChiFRBCSModel(_EngineModel.load(spark, path))
         model._resetUid(metadata["uid"])
         return model

@@ -799,16 +799,6 @@ def _ac_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.join(F.broadcast(r), ANTS)
 
 
-def _ac_cscores(scored: DataFrame) -> DataFrame:
-    """Per-(id, class) AC scores (round9 contract) from the scored
-    cell frame — the (id, r_cls, cscore, label) frame brier and
-    pr_auc aggregate."""
-    return scored.groupBy("id", "r_cls").agg(
-        F.round(F.sum(F.col("mu") * F.col("weight")), 9).alias("cscore"),
-        F.max("label").alias("label"),
-    )
-
-
 def _ac_per_example(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-example AC score folds (id, label, ssum, c1, ss2, chit)
     via the numpy membership core (r16, guide §4.2): the rule base is

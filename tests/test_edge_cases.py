@@ -34,6 +34,40 @@ def test_fit_single_class(spark):
     assert pred.filter(F.col("prediction") != 1).count() == 0
 
 
+def test_fit_and_save_from_fresh_thread(spark, tmp_path):
+    """save() must find the session from a thread that has never
+    created a DataFrame (the plan audit's worker threads): the
+    thread-local active session is unset there."""
+    import threading
+
+    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import (
+        ChiFRBCSClassifier,
+        ChiFRBCSModel,
+    )
+    from chi_frbcs_bigdatacs_spark.fuzzy.partitions import LINEITEM_CLF_PARTITIONS
+    from chi_frbcs_bigdatacs_spark.sources.testdata import lineitem_clf
+
+    df = lineitem_clf(spark, SF_SMALL)
+    path = str(tmp_path / "model")
+    out: dict = {}
+
+    def fit_and_save():
+        try:
+            model = ChiFRBCSClassifier(parts=LINEITEM_CLF_PARTITIONS).fit(df)
+            model.save(path)
+            out["rules"] = model.rules_rows
+        except Exception as e:  # surfaced on the test thread
+            out["error"] = e
+
+    t = threading.Thread(target=fit_and_save)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "fit/save thread did not finish"
+    assert "error" not in out, repr(out.get("error"))
+    loaded = ChiFRBCSModel.load(spark, path)
+    assert sorted(loaded.rules_rows) == sorted(out["rules"])
+
+
 def test_score_out_of_range_values(spark):
     """Values outside the declared ranges hit the shoulders and still
     classify (never unmatched-by-degeneracy)."""

@@ -49,6 +49,16 @@ def test_scoring_is_map_only_numpy(spark):
     assert "hashpartitioning" not in p, p[:800]
 
 
+def test_crossval_scoring_is_map_only_numpy(spark):
+    """q_crossval's folds fit with driver-resident rules, so each
+    held-out fold scores through the numpy batch scorer: the plan is
+    MapInPandas under the metrics aggregation, with no cell-explosion
+    Join (and no fit lineage — the rule base is a driver literal)."""
+    p = _plan(spark, "crossval_gm_auc")
+    assert "MapInPandas" in p, p[:800]
+    assert "Join" not in p, "crossval scoring regressed to the join path"
+
+
 def test_scoring_uses_broadcast(spark):
     """The join-path scorer (the no-driver-rules scale escape hatch)
     must ride the rule base to tasks as a broadcast — never a shuffle

@@ -160,9 +160,14 @@ def test_scoring_auto_mode_flips_at_budget_and_stays_bit_identical(spark):
     df = lineitem_clf(spark, SF_SMALL)
     model = ChiFRBCSClassifier(parts=P).fit(df)
 
-    # (a) fixture model is far under budget -> auto = broadcast
-    auto = model.transform(df)
+    # (a) fixture model is far under budget -> auto = broadcast. Auto
+    # mode picks the join strategy only where transform() takes the
+    # join path; a WR model with driver-resident rules scores with
+    # the numpy scorer instead, so use a distributed rule base here.
+    dist = ChiFRBCSClassifier(parts=P, collect_rules=False).fit(df)
+    auto = dist.transform(df)
     p = auto._jdf.queryExecution().executedPlan().toString()
+    dist.release()
     assert "BroadcastHashJoin" in p, "auto mode did not broadcast a small model"
 
     # (c) both physical paths agree bit-for-bit
