@@ -6,9 +6,11 @@ Classification System for imbalanced big data (Java / Hadoop
 MapReduce). This package re-expresses its entire computation —
 fuzzification, Chi rule generation, PCF-CS rule weighting, rule-base
 fusion, fuzzy-reasoning-method scoring, imbalance metrics — as lazy
-DataFrame algebra (Catalyst-optimized, whole-stage-codegen'd, zero
-Python UDFs on the training path), plus the relational / text / dedup
-/ similarity / streaming operator substrate a 100 TB training-data
+DataFrame algebra (Catalyst-optimized, whole-stage-codegen'd), with
+numpy mapInPandas passes where a per-row loop beats row expansion:
+the estimator's rule-statistics build and its WR/AC scorers share one
+numpy membership core. Plus the relational / text / dedup /
+similarity / streaming operator substrate a 100 TB training-data
 pipeline needs.
 
 Provenance: the local reference snapshot at /root/reference was empty

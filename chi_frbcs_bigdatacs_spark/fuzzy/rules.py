@@ -283,8 +283,15 @@ def raw_rule_stats(
     parts: FuzzyPartitions,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """The ONE heavy pass of the build: aggregate the bounded cell
-    explosion into per-(cell, class) statistics.
+    """The JVM form of the build's heavy pass: aggregate the bounded
+    cell explosion into per-(cell, class) statistics. It serves
+    build_rules (the spec and the catalog rule* keys) and
+    ChiFRBCSClassifier(collect_rules=False, or a key span past the
+    numpy build's slot bound), whose hash aggregate can spill; fit()
+    with collect_rules=True otherwise computes the same frame with
+    estimator.raw_rule_stats_numpy, bit for bit on the same
+    partitioning of usable rows (fit() drops the others before
+    either build).
 
     Output (tiny: <= data-touched L^d cells x classes rows):
       keys..., l1..ld, label, sraw (= sum of matching degrees of

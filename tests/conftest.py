@@ -70,6 +70,14 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = kept
+    config._fast_tier_deselected = len(dropped)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Name the tier that ran in the report's tail, so a verification
+    log says whether it covers the whole suite."""
+    n = getattr(config, "_fast_tier_deselected", None)
+    terminalreporter.write_line("tier=full" if n is None else f"tier=fast deselected={n}")
 
 
 @pytest.fixture(scope="session")

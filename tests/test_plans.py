@@ -44,8 +44,10 @@ def test_scoring_is_map_only_numpy(spark):
     assert "Join" not in p, "scoring regressed to the join path"
     assert "Window" not in p
     # the only exchange allowed is fit()'s round-robin input
-    # repartition — no hash exchange of the example rows (the old
+    # repartition, which fit_transform keeps for the input it caches
+    # and rescores — no hash exchange of the example rows (the old
     # join path shuffled every example on groupBy(id))
+    assert "RoundRobinPartitioning" in p, p[:800]
     assert "hashpartitioning" not in p, p[:800]
 
 
@@ -172,6 +174,40 @@ def test_build_is_single_pass(spark):
     assert final.count("Generate explode") == 4, (
         "bucketed build executes the cell explosion more than once"
     )
+
+
+def _fit_build_plan(spark, monkeypatch, **params) -> str:
+    """Executed plan of fit()'s build job: the statistics frame that
+    fit() collects, captured on its way out of raw_rule_stats_numpy."""
+    from chi_frbcs_bigdatacs_spark.fuzzy import estimator as E
+    from chi_frbcs_bigdatacs_spark.fuzzy.partitions import LINEITEM_CLF_PARTITIONS as P
+    from chi_frbcs_bigdatacs_spark.sources.testdata import lineitem_clf
+
+    frames = []
+    build = E.raw_rule_stats_numpy
+    monkeypatch.setattr(
+        E, "raw_rule_stats_numpy", lambda *a: frames.append(build(*a)) or frames[-1]
+    )
+    E.ChiFRBCSClassifier(parts=P, **params).fit(lineitem_clf(spark, SF_SMALL))
+    (raw,) = frames
+    return raw._jdf.queryExecution().executedPlan().toString()
+
+
+def test_fit_build_is_one_map_side_numpy_pass(spark, monkeypatch):
+    """A default fit() builds its statistics in ONE mapInPandas pass
+    over the input's own partitions, aggregated by a HashAggregate:
+    no cell-explosion Generate, no round-robin shuffle of the input."""
+    p = _fit_build_plan(spark, monkeypatch).split("== Initial Plan ==")[0]
+    assert "MapInPandas" in p, p[:800]
+    assert "HashAggregate" in p.split("MapInPandas")[0], p[:800]
+    assert "Generate" not in p, "fit() regressed to the cell explosion"
+    assert "RoundRobinPartitioning" not in p, "fit() shuffles its input"
+
+
+def test_fit_repartition_param_keeps_round_robin(spark, monkeypatch):
+    p = _fit_build_plan(spark, monkeypatch, repartition=4)
+    assert "MapInPandas" in p, p[:800]
+    assert "RoundRobinPartitioning(4)" in p, p[:800]
 
 
 def test_ivf_kmeans_assign_is_map_only(spark):
